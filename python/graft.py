@@ -281,16 +281,14 @@ def dsir_score(raw, id_col, text_col, target, target_text_col,
 
 # ---- persisted-index lifecycle (build once, serve every batch) ----
 
-def build_bm25_index(docs, id_col, text_col, path, term_buckets=64):
+def build_bm25_index(docs, id_col, text_col, path):
     """Build a persisted BM25 index (atomic versioned publish)."""
-    _api(docs).buildBm25Index(docs._jdf, id_col, text_col, path,
-                              int(term_buckets))
+    _api(docs).buildBm25Index(docs._jdf, id_col, text_col, path)
 
 
-def append_to_bm25_index(docs, id_col, text_col, path, term_buckets=64):
+def append_to_bm25_index(docs, id_col, text_col, path):
     """Append a crawl batch as an immutable delta segment."""
-    _api(docs).appendToBm25Index(docs._jdf, id_col, text_col, path,
-                                 int(term_buckets))
+    _api(docs).appendToBm25Index(docs._jdf, id_col, text_col, path)
 
 
 def delete_from_bm25_index(deleted_ids, id_col, path):

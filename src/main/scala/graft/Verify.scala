@@ -58,8 +58,9 @@ object Verify {
         }
       })
     }
-    futures.foreach(_.get())
-    pool.shutdown()
+    // the pool's threads are non-daemon: a throwing get() must not
+    // leave them holding the JVM open
+    try futures.foreach(_.get()) finally pool.shutdown()
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -364,76 +364,54 @@ object Decontaminate {
   }
 
   /** Collapse an [[appendToEvalIndex]] chain back to ONE segment: the
-    * distinct union of the chain's hashes republishes atomically (the
+    * chain's summed live hash counts republish atomically (the
     * applied-batch markers carry forward — [[graft.sources.IndexIO]]'s
     * compaction contract), so a benchmark suite maintained from a
     * stream ([[graft.streaming.Streaming.maintainEvalIndex]]) never
     * degrades its gate's broadcast build into a K-segment union read.
-    * Results are identical by construction: readers take the distinct
-    * union either way.
+    * Results are identical by construction: readers sum the counts
+    * either way.
     */
   def compactEvalIndex(
       spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
     import spark.implicits._
     if (graft.sources.IndexIO.segments(spark, path).length <= 1) return
     val n = evalIndexN(spark, path)
-    val chain = rawEvalChain(spark, path)
+    val chain = evalChain(spark, path)
     graft.sources.IndexIO.publish(spark, path) { nv =>
       // fail loudly on a negative summed count (retraction of text the
       // index never saw) inside the same pass that materializes the
       // compacted table — mirrors Dsir.compactDsirIndex's guard
-      val summed =
-        if (chain.columns.contains("cnt"))
-          chain.groupBy(col("h")).agg(sum(col("cnt")).as("cnt"))
-            .withColumn("cnt", when(col("cnt") < 0,
-              raise_error(concat(lit("eval index at "), lit(path),
-                lit(" has a negative hash count — deleteFromEvalIndex " +
-                  "retracted text that was never indexed")))
-              .cast("long")).otherwise(col("cnt")))
-            .filter(col("cnt") > 0)
-        else chain.select(col("h")).distinct() // pre-counts layout
-      summed.coalesce(1).write.mode("overwrite").parquet(s"$nv/hashes")
+      chain.groupBy(col("h")).agg(sum(col("cnt")).as("cnt"))
+        .withColumn("cnt", when(col("cnt") < 0,
+          raise_error(concat(lit("eval index at "), lit(path),
+            lit(" has a negative hash count — deleteFromEvalIndex " +
+              "retracted text that was never indexed")))
+          .cast("long")).otherwise(col("cnt")))
+        .filter(col("cnt") > 0)
+        .coalesce(1).write.mode("overwrite").parquet(s"$nv/hashes")
       Seq(Tuple1(n)).toDF("n")
         .coalesce(1).write.mode("overwrite").parquet(s"$nv/meta")
     }
     ()
   }
 
-  /** The raw hash chain, normalized across layout generations: a
-    * legacy pre-counts segment (`h` only, distinct hashes) mixed with
-    * counted `(h, cnt)` segments — the shape a counted append onto an
-    * old artifact creates — reads each legacy hash as ONE occurrence
-    * (`coalesce(cnt, 1)`), so upgrading an existing index never
-    * bricks its readers. Distinct-hash semantics make 1 the exact
-    * lower bound of what the legacy segment contributed; a retraction
-    * can therefore only under-release (hash stays live), never
-    * un-protect a surviving benchmark.
-    */
-  private def rawEvalChain(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val chain = graft.sources.IndexIO
-      .chainTable(spark, path, "hashes", allowMissingColumns = true)
+  /** The raw `(h, cnt)` hash chain: build, append and retraction
+    * segments alike. */
+  private def evalChain(
+      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    graft.sources.IndexIO.chainTable(spark, path, "hashes")
       .getOrElse(throw new IllegalStateException(
         s"eval index at $path has no hashes table"))
-    if (chain.columns.contains("cnt"))
-      chain.withColumn("cnt", coalesce(col("cnt"), lit(1L)))
-    else chain
-  }
 
-  /** The LIVE hashes of an eval index chain: for the count-carrying
-    * layout, a hash serves while its summed occurrence count across
-    * the append/retraction chain stays positive (see
-    * [[deleteFromEvalIndex]]); a pre-counts chain (older artifact)
-    * reads as the plain distinct union.
+  /** The LIVE hashes of an eval index chain: a hash serves while its
+    * summed occurrence count across the append/retraction chain stays
+    * positive (see [[deleteFromEvalIndex]]).
     */
   def evalIndexHashes(
-      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val chain = rawEvalChain(spark, path)
-    if (chain.columns.contains("cnt"))
-      chain.groupBy(col("h")).agg(sum(col("cnt")).as("__c"))
-        .filter(col("__c") > 0).select(col("h"))
-    else chain.select(col("h")).distinct()
-  }
+      spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    evalChain(spark, path).groupBy(col("h")).agg(sum(col("cnt")).as("__c"))
+      .filter(col("__c") > 0).select(col("h"))
 
   /** Pair-level attribution: which eval doc contaminated which train
     * doc, with the shared-shingle count — for auditing the flags

@@ -56,12 +56,11 @@ object IndexSync {
     */
   def syncBm25Index(
       spark: SparkSession, oldSnapshot: DataFrame, newSnapshot: DataFrame,
-      idCol: String, textCol: String, path: String,
-      termBuckets: Int = 64): Unit = {
+      idCol: String, textCol: String, path: String): Unit = {
     val (del, app, nDel, nApp) =
       changeSets(oldSnapshot, newSnapshot, idCol, Seq(textCol))
     if (nDel > 0) Search.deleteFromBm25Index(spark, path, del, idCol)
-    if (nApp > 0) Search.appendToBm25Index(app, idCol, textCol, path, termBuckets)
+    if (nApp > 0) Search.appendToBm25Index(app, idCol, textCol, path)
   }
 
   /** [[syncBm25Index]] for the unified lexical artifact
@@ -74,12 +73,11 @@ object IndexSync {
     */
   def syncLexicalIndex(
       spark: SparkSession, oldSnapshot: DataFrame, newSnapshot: DataFrame,
-      idCol: String, textCol: String, path: String,
-      termBuckets: Int = 64): Unit = {
+      idCol: String, textCol: String, path: String): Unit = {
     val (del, app, nDel, nApp) =
       changeSets(oldSnapshot, newSnapshot, idCol, Seq(textCol))
     if (nDel > 0) Search.deleteFromBm25Index(spark, path, del, idCol)
-    if (nApp > 0) Search.appendToLexicalIndex(app, idCol, textCol, path, termBuckets)
+    if (nApp > 0) Search.appendToLexicalIndex(app, idCol, textCol, path)
   }
 
   /** Sync a [[Dedup.buildMinhashIndex]] artifact: tombstoned sketches

@@ -311,17 +311,11 @@ object LangModel {
       unigramKeys: Array[Long], unigramCounts: Array[Long],
       vocab: Long, nTokens: Long)
 
-  /** Load a [[buildLmIndex]] artifact as an order-3 model. Fails
-    * loudly on a pre-trigram artifact (rebuild the index).
-    */
+  /** Load a [[buildLmIndex]] artifact as an order-3 model. */
   def loadLmModel3(
       spark: org.apache.spark.sql.SparkSession, path: String,
       maxEntries: Long = 32L << 20): LmModel3 = {
     val vdir = graft.sources.IndexIO.resolve(spark, path)
-    val triPath = new org.apache.hadoop.fs.Path(s"$vdir/trigrams")
-    require(triPath.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(triPath),
-      s"LM index at $path has no trigram table (built before order-3 " +
-        "support) — rebuild with buildLmIndex")
     val entries = spark.read.parquet(s"$vdir/trigrams").count() +
       spark.read.parquet(s"$vdir/bigrams").count() +
       spark.read.parquet(s"$vdir/unigrams").count()

@@ -110,18 +110,14 @@ object Search {
   /** Persist the full inverted index + doc stats so repeated queries
     * skip the corpus scan: `path/postings` holds `(term, doc_id, tf,
     * dl)` CLUSTERED BY term — hash-shuffled on term with the partition
-    * count sized at RUNTIME by AQE from the actual shuffle bytes
-    * (`termBuckets` is retained as the legacy fixed-spread knob; the
-    * write no longer pins the file count to it, so a micro-batch delta
-    * lands one small file instead of 64 near-empty ones while a full
-    * corpus build still fans out to advisory-sized files). Within each
-    * file rows sort by (term, doc_id), so a term lookup's row-group
-    * min/max pruning skips non-matching files exactly as before (the
-    * pruning comes from the sort, not the bucket count;
-    * the doc length rides DENORMALIZED in every posting row so the
-    * serving path never joins the corpus-sized lengths table),
-    * `path/lengths` holds `(doc_id, dl)` (delete-time stats correction
-    * + old-layout readers), `path/stats` the one-row corpus stats.
+    * count sized at RUNTIME by AQE from the actual shuffle bytes (a
+    * micro-batch delta lands one small file, a full corpus build fans
+    * out to advisory-sized files). Within each file rows sort by
+    * (term, doc_id), so a term lookup's row-group min/max pruning skips
+    * non-matching files (the doc length rides DENORMALIZED in every
+    * posting row so the serving path never joins the corpus-sized
+    * lengths table), `path/lengths` holds `(doc_id, dl)` (delete-time
+    * stats correction), `path/stats` the one-row corpus stats.
     * Written once per corpus snapshot, served by [[bm25SearchIndex]].
     */
   def buildBm25Index(
@@ -129,7 +125,6 @@ object Search {
       idCol: String,
       textCol: String,
       path: String,
-      termBuckets: Int = 64,
       marker: Option[String] = None): Unit = {
     // three tables, one atomic publish: postings/lengths/stats land in
     // a fresh version dir and the _LATEST pointer flips last, so a
@@ -145,7 +140,7 @@ object Search {
       // everything it needs from the pruned term buckets alone — no
       // corpus-sized lengths join per query (at 100 TB that join was
       // the serving bottleneck; lengths persists only for delete-time
-      // stats correction and old-layout readers)
+      // stats correction)
       // per-doc postings fold in the scan projection (TermPostingsExpr):
       // the old posexplode -> groupBy(doc_id, dl, term) shape shuffled
       // one row PER TOKEN for an aggregation that is row-local
@@ -189,7 +184,6 @@ object Search {
       idCol: String,
       textCol: String,
       path: String,
-      termBuckets: Int = 64,
       marker: Option[String] = None): Unit = {
     val spark = docs.sparkSession
     graft.sources.IndexIO.resolve(spark, path) // fail fast on a missing index
@@ -203,25 +197,13 @@ object Search {
       count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s")).head()
     if (add.getLong(0) == 0L) return
     import spark.implicits._
-    // the BASE chain fixes the postings layout: a pre-denormalization
-    // artifact (postings without dl) must keep appending WITHOUT dl —
-    // chainTable's strict unionByName would otherwise fail on every
-    // subsequent read of the mixed chain (bricking the index until a
-    // rebuild). Serving re-joins lengths for that layout, and
-    // compactBm25Index migrates it to the denormalized one.
-    val baseHasDl = chainPostingsHaveDl(spark, path)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
-      val toks = docs.select(col(idCol).as("doc_id"),
-        size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"),
-        explode(TextFunctions.termPostings(col(textCol),
-          withPositions = false)).as("__p"))
-      val posted =
-        if (baseHasDl)
-          toks.select(col("doc_id"), col("dl"),
-            col("__p.term").as("term"), col("__p.tf").as("tf"))
-        else toks.select(col("doc_id"),
+      docs.select(col(idCol).as("doc_id"),
+          size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"),
+          explode(TextFunctions.termPostings(col(textCol),
+            withPositions = false)).as("__p"))
+        .select(col("doc_id"), col("dl"),
           col("__p.term").as("term"), col("__p.tf").as("tf"))
-      posted
         .repartition(col("term")) // AQE sizes the partition count from actual bytes
         .sortWithinPartitions("term", "doc_id")
         .write.mode("overwrite").parquet(s"$seg/postings")
@@ -268,18 +250,11 @@ object Search {
     * live postings re-bucketed by term, live lengths, the corrected
     * stats carried forward. Identical serving results by construction.
     */
-  def compactBm25Index(
-      spark: SparkSession, path: String, termBuckets: Int = 64): Unit = {
+  def compactBm25Index(spark: SparkSession, path: String): Unit = {
     if (graft.sources.IndexIO.segments(spark, path).length <= 1) return
-    val postings0 = liveTable(spark, path, "postings")
+    val postings = liveTable(spark, path, "postings")
     val lengths = liveTable(spark, path, "lengths")
     val stats = chainStats(spark, path)
-    // compaction is the layout-migration point: a pre-denormalization
-    // artifact's postings gain the dl column here (one build-time
-    // join), so serving drops the lengths join from this version on
-    val postings =
-      if (postings0.columns.contains("dl")) postings0
-      else postings0.join(lengths, "doc_id")
     graft.sources.IndexIO.publish(spark, path) { nv =>
       postings.repartition(col("term")) // AQE sizes the partition count from actual bytes
         .sortWithinPartitions("term", "doc_id")
@@ -300,24 +275,6 @@ object Search {
         throw new IllegalStateException(s"BM25 index at $path has no $name table")),
       graft.sources.IndexIO.chainTable(spark, path, "tombstones"),
       "doc_id")
-
-  /** Whether the chain's postings carry the denormalized `dl` column.
-    * Probed from the OLDEST postings-bearing segment, never from the
-    * latest version directory: a tombstone-only delete segment carries
-    * no postings table, so a vdir probe would throw path-not-found and
-    * break the delete-then-append composition. The oldest data segment
-    * fixes the layout every later append must match (chainTable's
-    * strict unionByName enforces it on read).
-    */
-  private def chainPostingsHaveDl(spark: SparkSession, path: String): Boolean = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val seg = graft.sources.IndexIO.segments(spark, path).find { s =>
-      val p = new org.apache.hadoop.fs.Path(s, "postings")
-      p.getFileSystem(conf).exists(p)
-    }.getOrElse(throw new IllegalStateException(
-      s"cannot append to $path: no segment carries a postings table"))
-    spark.read.parquet(s"$seg/postings").columns.contains("dl")
-  }
 
   /** The chain's one-row corpus stats: the NEWEST stats-bearing segment
     * wins. Appends and the stats-correcting [[deleteFromBm25Index]]
@@ -342,9 +299,9 @@ object Search {
     * [[buildLexicalIndex]] — column pruning drops the positions) index.
     * The postings scan carries a pushed-down `term IN (…)` filter
     * (row-group min/max skips non-matching buckets' files outright);
-    * scoring arithmetic is identical to [[bm25TopK]]. Postings and
-    * lengths read through the tombstone chain; stats come from the
-    * newest segment (corrected at delete time).
+    * scoring arithmetic is identical to [[bm25TopK]]. Postings read
+    * through the tombstone chain and carry each doc's length; stats
+    * come from the newest segment (corrected at delete time).
     */
   def bm25SearchIndex(
       spark: SparkSession,
@@ -361,31 +318,19 @@ object Search {
         .filter(col("term").isin(terms: _*)),
       graft.sources.IndexIO.chainTable(spark, path, "tombstones"),
       "doc_id")
-    // lengths is BY-NAME into the scorer: the current layout carries dl
-    // in every posting row, so resolving the corpus-sized lengths chain
-    // (one listing + footer read per segment, per query) only happens
-    // for pre-denormalization artifacts that actually join it
-    def lengths = liveTable(spark, path, "lengths")
-    val stats = chainStats(spark, path)
-    bm25ScoreIndexed(postings, lengths, stats, k, k1, b)
+    bm25ScoreIndexed(postings, chainStats(spark, path), k, k1, b)
   }
 
   /** The [[bm25SearchIndex]] scoring core over already-resolved
-    * `(doc_id, term, tf)` postings, `(doc_id, dl)` lengths and the
-    * one-row stats — shared with [[hybridLexicalPhraseTopK]], whose
-    * single artifact probe feeds this AND the phrase leg.
+    * `(doc_id, term, tf, dl)` postings and the one-row stats — shared
+    * with [[hybridLexicalPhraseTopK]], whose single artifact probe
+    * feeds this AND the phrase leg.
     */
   private def bm25ScoreIndexed(
-      postings: DataFrame, lengths: => DataFrame, stats: DataFrame,
+      postings: DataFrame, stats: DataFrame,
       k: Int, k1: Double, b: Double): DataFrame = {
     val dfs = postings.groupBy("term").agg(count(lit(1)).as("df"))
-    // current layout carries dl in the postings rows — serving never
-    // touches the corpus-sized lengths table; pre-denormalization
-    // artifacts fall back to the doc_id join
-    val withDl =
-      if (postings.columns.contains("dl")) postings
-      else postings.join(lengths, "doc_id")
-    withDl
+    postings
       .join(broadcast(dfs), "term")
       .crossJoin(broadcast(stats))
       .withColumn("__idf",
@@ -1074,8 +1019,7 @@ object Search {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      path: String,
-      termBuckets: Int = 64): Unit = {
+      path: String): Unit = {
     graft.sources.IndexIO.publish(docs.sparkSession, path) { vdir =>
       docs
         .select(col(idCol).cast("long").as("doc_id"),
@@ -1104,8 +1048,7 @@ object Search {
       docs: DataFrame,
       idCol: String,
       textCol: String,
-      path: String,
-      termBuckets: Int = 64): Unit = {
+      path: String): Unit = {
     val spark = docs.sparkSession
     graft.sources.IndexIO.resolve(spark, path) // fail loudly on no base
     val postings = docs
@@ -1144,8 +1087,7 @@ object Search {
     * ONE segment of live rows, re-bucketed by term — identical serving
     * results by construction, mirrors [[compactBm25Index]].
     */
-  def compactPositionalIndex(
-      spark: SparkSession, path: String, termBuckets: Int = 64): Unit = {
+  def compactPositionalIndex(spark: SparkSession, path: String): Unit = {
     if (graft.sources.IndexIO.segments(spark, path).length <= 1) return
     val postings = liveTable(spark, path, "postings")
     graft.sources.IndexIO.publish(spark, path) { nv =>
@@ -1205,7 +1147,6 @@ object Search {
       idCol: String,
       textCol: String,
       path: String,
-      termBuckets: Int = 64,
       marker: Option[String] = None): Unit = {
     graft.sources.IndexIO.publish(docs.sparkSession, path, marker) { vdir =>
       val lengths = docs.select(
@@ -1240,7 +1181,6 @@ object Search {
       idCol: String,
       textCol: String,
       path: String,
-      termBuckets: Int = 64,
       marker: Option[String] = None): Unit = {
     val spark = docs.sparkSession
     graft.sources.IndexIO.resolve(spark, path) // fail fast on a missing index
@@ -1254,24 +1194,14 @@ object Search {
       count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("s")).head()
     if (add.getLong(0) == 0L) return
     import spark.implicits._
-    // match the BASE chain's postings layout (see appendToBm25Index):
-    // a pre-denormalization lexical artifact keeps appending without
-    // dl so the chain union stays schema-consistent
-    val baseHasDl = chainPostingsHaveDl(spark, path)
     graft.sources.IndexIO.publishDelta(spark, path, marker) { seg =>
-      val toks = docs
+      docs
         .select(col(idCol).cast("long").as("doc_id"),
           size(TextFunctions.tokens(col(textCol))).cast("long").as("dl"),
           explode(TextFunctions.termPostings(col(textCol),
             withPositions = true)).as("__p"))
-      val posted =
-        if (baseHasDl)
-          toks.select(col("__p.term").as("term"), col("doc_id"), col("dl"),
-            col("__p.tf").as("tf"), col("__p.positions").as("positions"))
-        else
-          toks.select(col("__p.term").as("term"), col("doc_id"),
-            col("__p.tf").as("tf"), col("__p.positions").as("positions"))
-      posted
+        .select(col("__p.term").as("term"), col("doc_id"), col("dl"),
+          col("__p.tf").as("tf"), col("__p.positions").as("positions"))
         .repartition(col("term")) // AQE sizes the partition count from actual bytes
         .sortWithinPartitions("term", "doc_id")
         .write.mode("overwrite").parquet(s"$seg/postings")
@@ -1299,8 +1229,7 @@ object Search {
       spark: SparkSession,
       bm25Path: String,
       positionalPath: String,
-      outPath: String,
-      termBuckets: Int = 64): Unit = {
+      outPath: String): Unit = {
     val lengths = liveTable(spark, bm25Path, "lengths")
     val posBare = liveTable(spark, positionalPath, "postings")
       .select(col("term"), col("doc_id"),
@@ -1382,19 +1311,13 @@ object Search {
       graft.sources.IndexIO.chainTable(spark, path, "tombstones"),
       "doc_id")
       .localCheckpoint(true)
-    // by-name into the scorer (see bm25SearchIndex): only resolved for
-    // pre-denormalization artifacts whose postings lack dl
-    def lengths = liveTable(spark, path, "lengths")
     val stats = chainStats(spark, path)
 
-    val lexCols =
-      if (postings.columns.contains("dl")) Seq("doc_id", "term", "tf", "dl")
-      else Seq("doc_id", "term", "tf")
     val lexRanked = scoreRanked(
       bm25ScoreIndexed(
           postings.filter(col("term").isin(lexTerms: _*))
-            .select(lexCols.map(col): _*),
-          lengths, stats, fetchK, k1, b)
+            .select("doc_id", "term", "tf", "dl"),
+          stats, fetchK, k1, b)
         .select(col("doc_id").as("__id"), col("score").as("__s")))
 
     val slots = phrase.zipWithIndex.map { case (t, i) => (i, t) }.toDF("__pi", "__t")

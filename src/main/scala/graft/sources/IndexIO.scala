@@ -19,14 +19,14 @@ import org.apache.spark.sql.SparkSession
   *
   *   - every build writes ALL its tables under a fresh
   *     `<path>/v-<uuid>/` directory, invisible to readers;
-  *   - the version's `_SEGMENTS` file lists the IMMUTABLE data
+  *   - the version's `_SEGMENTS` file opens with the on-disk format
+  *     stamp ([[FormatVersion]]) and lists the IMMUTABLE data
   *     directories that make up the index at that version (as
   *     directory names RELATIVE to the index base, so a moved or
-  *     re-mounted index keeps its chains; absolute entries from older
-  *     builds still resolve) — just itself for a full build, the
-  *     parent's segments plus itself for an incremental append
-  *     ([[publishDelta]]); readers scan the union, so "append" never
-  *     rewrites or mutates existing data;
+  *     re-mounted index keeps its chains) — just itself for a full
+  *     build, the parent's segments plus itself for an incremental
+  *     append ([[publishDelta]]); readers scan the union, so "append"
+  *     never rewrites or mutates existing data;
   *   - the single-file pointer `<path>/_LATEST` (the uuid, written via
   *     create-temp + atomic rename-overwrite) is flipped LAST;
   *   - readers resolve `_LATEST` once and then read only that
@@ -36,7 +36,9 @@ import org.apache.spark.sql.SparkSession
   *
   * A failed build leaves the pointer on the previous complete version;
   * a path with no pointer fails loudly at resolve time instead of
-  * probing torn tables.
+  * probing torn tables. A version whose `_SEGMENTS` lacks the current
+  * stamp is refused by every read and by every publish on top of it:
+  * there is one on-disk format, and rebuilding is the only upgrade.
   *
   * Retention: publish-time pruning keeps the [[RetainVersions]] most
   * recently published COMPLETE versions (plus everything their segment
@@ -93,6 +95,13 @@ object IndexIO {
   private val SegmentsFile = "_SEGMENTS"
   private val PinSep = "@v="
   private val AppendLockFile = "_APPEND_LOCK"
+
+  /** The on-disk format every committed version carries, stamped as the
+    * first line of its `_SEGMENTS` file (`format=<n>`). Checking it
+    * costs no extra FS call: every read opens `_SEGMENTS` anyway.
+    */
+  private[graft] val FormatVersion = 2
+  private val FormatPrefix = "format="
 
   /** How long a held append lock is trusted before a competing
     * publisher treats it as a crash leftover and takes it over. Delta
@@ -390,42 +399,33 @@ object IndexIO {
       marker: Option[String], conf: org.apache.hadoop.conf.Configuration,
       base: Path, fs: FileSystem)(build: String => Unit): String = {
     val previous = currentVersion(spark, path)
-    if (delta && previous.isEmpty) throw new IllegalStateException(
-      s"cannot append to $path: no committed base index ($Pointer missing)")
-    val parentSegments = previous.toSeq.flatMap(v => readSegments(fs, versionDir(base, v)))
+    // the parent (chain, applied-batch markers) is read through the
+    // format check, so neither an append nor a rebuild ever lands on top
+    // of a layout this build can't read
+    val parent: Option[(Seq[String], Seq[String])] = previous.flatMap(v =>
+      committedChain(fs, base, v, pinned = false)
+        .map(_ -> chainMarkers(fs, versionDir(base, v))))
+    if (delta && parent.isEmpty) throw new IllegalStateException(
+      s"cannot append to $path: no committed base index (" +
+        previous.fold(s"$Pointer missing")(v => s"$Pointer names missing version $v") + ")")
     val version = java.util.UUID.randomUUID().toString.replace("-", "")
     val vdir = versionDir(base, version)
     build(vdir.toString)
-    // applied-batch markers live INSIDE the segment, so they are atomic
-    // with its data (a marker is visible iff the append is). A FULL
-    // publish (compaction, rebuild) carries the previous version's
-    // marker set forward — collapsing segments must not forget which
-    // stream batches the collapsed data contains, or a post-compaction
-    // replay would double-append.
-    val parentAggregate: Seq[String] = previous.toSeq.flatMap(v =>
-      readAggregatedMarkers(fs, versionDir(base, v), parentSegments))
-    val carried: Seq[String] =
-      if (delta) Seq.empty
-      else parentAggregate
-    (carried ++ marker).distinct.foreach { m =>
-      writeFile(fs, new Path(vdir, s"$MarkerPrefix$m"), "")
-    }
-    // chain-level marker AGGREGATE: the union of every live segment's
-    // markers as of THIS version, one file in the version dir — so a
-    // maintainer's per-batch replay check ([[segmentMarkers]]) is ONE
-    // read instead of a listing per chain segment (K listings per
-    // micro-batch is pure object-store latency at 100 TB). Per-segment
-    // `_MARKER.*` files remain the source of truth (atomic with their
-    // segment); the aggregate is derived, and readers fall back to the
-    // per-segment walk on chains whose tip predates it.
+    // the chain's applied-batch markers, one `_MARKERS` file in the
+    // version dir: written before `_SEGMENTS` and the pointer flip, so a
+    // marker is visible iff its append is. A FULL publish (compaction,
+    // rebuild) carries the parent's set forward — collapsing segments
+    // must not forget which stream batches the collapsed data contains,
+    // or a post-compaction replay would double-append.
     writeFile(fs, new Path(vdir, MarkersFile),
-      (parentAggregate ++ marker).distinct.mkString("\n"))
+      (parent.toSeq.flatMap(_._2) ++ marker).distinct.mkString("\n"))
     val newSegments =
-      (if (delta) parentSegments else Seq.empty) :+ vdir.toString
+      (if (delta) parent.get._1 else Seq.empty) :+ vdir.toString
     // segment entries are stored as names relative to the index base so
     // the chain survives a directory move/rename or a different mount URI
     writeFile(fs, new Path(vdir, SegmentsFile),
-      newSegments.map(p => new Path(p).getName).mkString("\n"))
+      (s"$FormatPrefix$FormatVersion" +: newSegments.map(p => new Path(p).getName))
+        .mkString("\n"))
     // FileContext.rename(OVERWRITE) is the atomic single-file swap on
     // HDFS-like stores (FileSystem.rename refuses an existing target).
     // On the LOCAL (Checksum) filesystem it is check-delete-rename of
@@ -446,25 +446,15 @@ object IndexIO {
     vdir.toString
   }
 
-  /** The applied-batch markers of the CURRENT index: the union of every
-    * live segment's `_MARKER.*` files. A streaming maintainer records
-    * its micro-batch id here atomically with the appended data and
-    * skips batches already present — exactly-once index maintenance
-    * under foreachBatch's at-least-once replay ([[
+  /** The applied-batch markers of the CURRENT index (empty when none is
+    * committed). A streaming maintainer records its micro-batch id here
+    * atomically with the appended data and skips batches already
+    * present — exactly-once index maintenance under foreachBatch's
+    * at-least-once replay ([[
     * graft.streaming.Streaming.maintainBm25Index]]).
     */
-  def segmentMarkers(spark: SparkSession, path: String): Set[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val (baseStr, _) = splitPin(path)
-    val base = new Path(baseStr)
-    val fs = base.getFileSystem(conf)
-    currentVersion(spark, path) match {
-      case None => Set.empty
-      case Some(v) =>
-        val vdir = versionDir(base, v)
-        readAggregatedMarkers(fs, vdir, readSegments(fs, vdir)).toSet
-    }
-  }
+  def segmentMarkers(spark: SparkSession, path: String): Set[String] =
+    segmentMarkersIfExists(spark, path).getOrElse(Set.empty)
 
   /** [[segmentMarkers]] with the "is there a committed index at all"
     * probe fused in: `None` when no committed version exists (the
@@ -477,43 +467,24 @@ object IndexIO {
   def segmentMarkersIfExists(
       spark: SparkSession, path: String): Option[Set[String]] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val (baseStr, _) = splitPin(path)
+    val (baseStr, pinned) = splitPin(path)
     val base = new Path(baseStr)
     val fs = base.getFileSystem(conf)
     currentVersion(spark, path).flatMap { v =>
-      val vdir = versionDir(base, v)
-      if (!fs.exists(vdir)) None // pointer to a removed version = no index
-      else Some(readAggregatedMarkers(fs, vdir, readSegments(fs, vdir)).toSet)
+      committedChain(fs, base, v, pinned.isDefined)
+        .map(_ => chainMarkers(fs, versionDir(base, v)).toSet)
     }
   }
 
-  private val MarkerPrefix = "_MARKER."
   private val MarkersFile = "_MARKERS"
 
-  /** The chain's full marker set at `vdir`: one read of the version's
-    * `_MARKERS` aggregate when present (publishes since the aggregate
-    * landed write it), else the legacy per-segment `_MARKER.*` walk —
-    * a listing per chain segment.
+  /** The chain's full marker set, one read of the version's `_MARKERS`.
+    * Every publish writes the file, so a failed read propagates: an
+    * empty set would make a maintainer re-append a replayed batch.
     */
-  private def readAggregatedMarkers(
-      fs: FileSystem, vdir: Path, chainSegments: Seq[String]): Seq[String] = {
-    val agg = new Path(vdir, MarkersFile)
-    val viaFile =
-      try {
-        if (fs.exists(agg))
-          Some(readFile(fs, agg).split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
-        else None
-      } catch { case _: java.io.IOException => None }
-    viaFile.getOrElse(
-      chainSegments.flatMap(s => readMarkers(fs, new Path(s))).distinct)
-  }
-
-  private def readMarkers(fs: FileSystem, segDir: Path): Seq[String] =
-    if (!fs.exists(segDir)) Seq.empty
-    else fs.listStatus(segDir).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith(MarkerPrefix))
-      .map(_.stripPrefix(MarkerPrefix))
+  private def chainMarkers(fs: FileSystem, vdir: Path): Seq[String] =
+    readFile(fs, new Path(vdir, MarkersFile))
+      .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
 
   /** Drop complete version dirs not reachable from the `retain` most
     * recently published versions' segment chains. In-flight dirs (no
@@ -551,7 +522,7 @@ object IndexIO {
       .take(math.max(retain, 1)).map(_._1) ++
       complete.map(_._1).filter(p =>
         pointed.contains(p.getName) || protectedDirs.contains(p.getName))
-    val keep = kept.flatMap(v => readSegments(fs, v).map(p => new Path(p).getName))
+    val keep = kept.flatMap(v => readChain(fs, v).toSeq.flatten.map(p => new Path(p).getName))
       .toSet ++ kept.map(_.getName)
     // PRUNE GRACE (publish-time only): a version published moments ago
     // may be mid-read by a concurrent query that resolved it before
@@ -611,10 +582,10 @@ object IndexIO {
 
   /** True when `path` holds a committed index — the build-or-reuse probe
     * for callers that want to skip a rebuild when a published version
-    * already exists. Mirrors [[resolve]]'s second check: a pointer whose
-    * version dir was removed (external vacuum, partial /tmp cleanup)
-    * reads as "no committed index" so the caller rebuilds instead of
-    * failing at resolve() for the rest of the JVM's lifetime.
+    * already exists. A pointer whose version dir was removed (external
+    * vacuum, partial /tmp cleanup) reads as "no committed index" so the
+    * caller rebuilds instead of failing at resolve() for the rest of
+    * the JVM's lifetime.
     */
   def exists(spark: SparkSession, path: String): Boolean =
     currentVersion(spark, path).exists { v =>
@@ -623,45 +594,40 @@ object IndexIO {
     }
 
   /** The committed version directory under `path`, or a loud error if
-    * no build ever published (or the published version was removed).
-    * A [[pin]]ned path resolves its pinned version instead of
-    * `_LATEST` — missing (pruned) pins fail here, loudly.
+    * no build ever published (or the published version was removed, or
+    * carries another on-disk format). A [[pin]]ned path resolves its
+    * pinned version instead of `_LATEST` — missing (pruned) pins fail
+    * here, loudly.
     */
-  def resolve(spark: SparkSession, path: String): String = {
-    val (base, pinned) = splitPin(path)
-    val version = currentVersion(spark, path).getOrElse(throw new IllegalStateException(
-      s"no committed index at $path: $Pointer missing — " +
-        "either no build ran or it failed before publish"))
-    val vdir = versionDir(new Path(base), version)
-    val fs = vdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(vdir)) throw new IllegalStateException(
-      if (pinned.isDefined)
-        s"pinned version $version at $base is gone — pruned by a later " +
-          "publish/vacuum, or never published; pin within the retention window"
-      else s"index pointer at $base names missing version $version")
-    // a pin names a version the CALLER asserts was published — but the
-    // dir existing is not enough: an in-flight/crashed build id also
-    // has a dir, just no _SEGMENTS, and readSegments' pre-segments
-    // fallback would then serve the torn tables silently. Publishes
-    // write _SEGMENTS before the pointer swap, so every version a pin
-    // could legitimately name has it; its absence means the pin is
-    // bogus, and "never silently serve wrong data" wins.
-    if (pinned.isDefined && !fs.exists(new Path(vdir, SegmentsFile)))
-      throw new IllegalStateException(
-        s"pinned version $version at $base is incomplete (no " +
-          s"$SegmentsFile) — it names an in-flight or crashed build, " +
-          "not a published version; pin currentVersionId() instead")
-    vdir.toString
-  }
+  def resolve(spark: SparkSession, path: String): String =
+    resolveChain(spark, path)._1.toString
 
   /** The immutable data directories making up the CURRENT index at
     * `path` (oldest first): one for a plain build, the whole append
     * chain for an incrementally-grown index. Readers union these.
     */
-  def segments(spark: SparkSession, path: String): Seq[String] = {
-    val vdir = new Path(resolve(spark, path))
+  def segments(spark: SparkSession, path: String): Seq[String] =
+    resolveChain(spark, path)._2
+
+  /** [[resolve]] and [[segments]] from ONE read of the version's
+    * `_SEGMENTS`: the file marks the version committed, lists its chain
+    * and carries the format stamp.
+    */
+  private def resolveChain(spark: SparkSession, path: String): (Path, Seq[String]) = {
+    val (baseStr, pinned) = splitPin(path)
+    val version = currentVersion(spark, path).getOrElse(throw new IllegalStateException(
+      s"no committed index at $path: $Pointer missing — " +
+        "either no build ran or it failed before publish"))
+    val base = new Path(baseStr)
+    val vdir = versionDir(base, version)
     val fs = vdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readSegments(fs, vdir)
+    val chain = committedChain(fs, base, version, pinned.isDefined)
+      .getOrElse(throw new IllegalStateException(
+        if (pinned.isDefined)
+          s"pinned version $version at $baseStr is gone — pruned by a later " +
+            "publish/vacuum, or never published; pin within the retention window"
+        else s"index pointer at $baseStr names missing version $version"))
+    (vdir, chain)
   }
 
   /** [[segments]] with the committed-index probe fused in: `None` when
@@ -671,14 +637,11 @@ object IndexIO {
     */
   def segmentsIfExists(spark: SparkSession, path: String): Option[Seq[String]] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val (baseStr, _) = splitPin(path)
+    val (baseStr, pinned) = splitPin(path)
     val base = new Path(baseStr)
     val fs = base.getFileSystem(conf)
-    currentVersion(spark, path).flatMap { v =>
-      val vdir = versionDir(base, v)
-      if (!fs.exists(vdir)) None
-      else Some(readSegments(fs, vdir))
-    }
+    currentVersion(spark, path).flatMap(v =>
+      committedChain(fs, base, v, pinned.isDefined))
   }
 
   /** Chain-ordered union of `<segment>/<name>` across the CURRENT
@@ -686,16 +649,8 @@ object IndexIO {
     * `__seg` (0 = oldest). Segments lacking the table are skipped —
     * that is how tombstone-only delete segments coexist with data
     * segments. None when no segment carries the table.
-    *
-    * `allowMissingColumns` unions segments whose schemas differ
-    * (missing columns read as null) — for families whose segment
-    * layout gained a column over time (e.g. the eval index's
-    * pre-counts `h`-only segments under counted `(h, cnt)` appends);
-    * the caller owns the null semantics. Default false so genuine
-    * schema corruption in uniform families still fails loudly.
     */
-  def chainTable(spark: SparkSession, path: String, name: String,
-      allowMissingColumns: Boolean = false)
+  def chainTable(spark: SparkSession, path: String, name: String)
       : Option[org.apache.spark.sql.DataFrame] = {
     val conf = spark.sparkContext.hadoopConfiguration
     segments(spark, path).zipWithIndex.flatMap { case (s, i) =>
@@ -705,7 +660,7 @@ object IndexIO {
         Some(spark.read.parquet(p.toString)
           .withColumn("__seg", org.apache.spark.sql.functions.lit(i)))
       else None
-    }.reduceOption(_.unionByName(_, allowMissingColumns))
+    }.reduceOption(_.unionByName(_))
   }
 
   /** One-row OPERATIONAL summary of a persisted index — the
@@ -767,14 +722,44 @@ object IndexIO {
   private def versionDir(base: Path, version: String): Path =
     new Path(base, s"v-$version")
 
-  private def readSegments(fs: FileSystem, vdir: Path): Seq[String] = {
-    val f = new Path(vdir, SegmentsFile)
-    if (!fs.exists(f)) Seq(vdir.toString) // pre-segments layout
-    else readFile(fs, f).split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-      // relative entries (current layout) resolve against the index
-      // base; absolute entries (older builds) pass through unchanged
-      .map(e => if (e.contains("/")) e else new Path(vdir.getParent, e).toString)
+  /** The segment chain (oldest first) of the version at `vdir`, after
+    * checking its format stamp; None when it has no `_SEGMENTS`.
+    */
+  private def readChain(fs: FileSystem, vdir: Path): Option[Seq[String]] = {
+    val lines =
+      try readFile(fs, new Path(vdir, SegmentsFile))
+        .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+      catch { case _: java.io.FileNotFoundException => return None }
+    val found = lines.headOption.filter(_.startsWith(FormatPrefix))
+    if (!found.contains(s"$FormatPrefix$FormatVersion"))
+      throw formatError(vdir,
+        found.fold("none (unstamped _SEGMENTS)")(_.stripPrefix(FormatPrefix)))
+    Some(lines.tail.map(e => new Path(vdir.getParent, e).toString))
   }
+
+  /** [[readChain]] of a version a pointer or pin names: None when its
+    * directory is gone (a dangling pointer reads as no index). A version
+    * dir without `_SEGMENTS` is never a committed current-format
+    * version: publishes write the file before the pointer flip.
+    */
+  private def committedChain(fs: FileSystem, base: Path, version: String,
+      pinned: Boolean): Option[Seq[String]] = {
+    val vdir = versionDir(base, version)
+    readChain(fs, vdir).orElse {
+      if (!fs.exists(vdir)) None
+      else if (pinned) throw new IllegalStateException(
+        s"pinned version $version at $base is incomplete (no " +
+          s"$SegmentsFile) — it names an in-flight or crashed build, " +
+          "not a published version; pin currentVersionId() instead")
+      else throw formatError(vdir, s"none (no $SegmentsFile)")
+    }
+  }
+
+  private def formatError(vdir: Path, found: String): IllegalStateException =
+    new IllegalStateException(
+      s"index at ${vdir.getParent} (${vdir.getName}) has on-disk format " +
+        s"$found, expected format $FormatVersion — remove the directory " +
+        "and rebuild with the family's build function")
 
   private def writeFile(fs: FileSystem, p: Path, content: String): Unit = {
     val out = fs.create(p, true)
@@ -804,10 +789,8 @@ object IndexIO {
     // probe sleep-free.
     var attempt = 0
     while (true) {
-      try {
-        if (fs.exists(ptr))
-          return Some(readFile(fs, ptr).trim).filter(_.nonEmpty)
-      } catch { case _: java.io.IOException => () /* torn crc mid-flip */ }
+      try return Some(readFile(fs, ptr).trim).filter(_.nonEmpty)
+      catch { case _: java.io.IOException => () /* absent, or torn crc mid-flip */ }
       val committedOnDisk =
         try fs.exists(new Path(base)) && fs.listStatus(new Path(base)).exists(st =>
           st.isDirectory && st.getPath.getName.startsWith("v-") &&

@@ -723,10 +723,15 @@ object Streaming {
     */
   private def collectExact(
       hashes: DataFrame, hashCol: String, maxExactHashes: Long): Array[Long] = {
-    val capped = math.min(maxExactHashes, Int.MaxValue - 8L).toInt
+    // one row past the cap must still fit a JVM array, or an over-limit
+    // set would pass with a silently truncated array
+    require(maxExactHashes <= Int.MaxValue - 8L,
+      s"maxExactHashes=$maxExactHashes exceeds the largest collectable " +
+        s"array (${Int.MaxValue - 8L} hashes)")
     // sort().limit().collect() not collect().sorted — the sort runs
     // distributed and the driver only merges ordered partition heads
-    val arr = hashes.sort(hashCol).limit(capped + 1).collect().map(_.getLong(0))
+    val arr = hashes.sort(hashCol).limit(maxExactHashes.toInt + 1)
+      .collect().map(_.getLong(0))
     require(arr.length <= maxExactHashes,
       s"eval set has more than maxExactHashes=$maxExactHashes distinct " +
         "shingle hashes; decontaminate in batch instead " +
@@ -981,18 +986,17 @@ object Streaming {
       textCol: String,
       path: String,
       checkpointDir: String,
-      termBuckets: Int = 64,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
       vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Search
     maintainChain(stream, path, checkpointDir, compactEvery,
       vacuumEvery, vacuumRetain)(
-      (b, m) => Search.buildBm25Index(b, idCol, textCol, path, termBuckets,
+      (b, m) => Search.buildBm25Index(b, idCol, textCol, path,
         marker = Some(m)))(
-      (b, m) => Search.appendToBm25Index(b, idCol, textCol, path, termBuckets,
+      (b, m) => Search.appendToBm25Index(b, idCol, textCol, path,
         marker = Some(m)))(
-      s => Search.compactBm25Index(s, path, termBuckets))
+      s => Search.compactBm25Index(s, path))
   }
 
   /** Maintain a BM25 index from a CDC CHANGE FEED — the streaming
@@ -1075,7 +1079,6 @@ object Streaming {
       textCol: String,
       path: String,
       checkpointDir: String,
-      termBuckets: Int = 64,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
       vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
@@ -1083,12 +1086,12 @@ object Streaming {
     maintainCdcChain(stream, idCol, statusCol, path, checkpointDir,
       compactEvery, vacuumEvery, vacuumRetain)(
       (a, m) => Search.buildBm25Index(a, idCol, textCol, path,
-        termBuckets, marker = Some(m)))(
+        marker = Some(m)))(
       (d, m) => Search.deleteFromBm25Index(d.sparkSession, path, d,
         idCol, marker = m))(
       (a, m) => Search.appendToBm25Index(a, idCol, textCol, path,
-        termBuckets, marker = Some(m)))(
-      s => Search.compactBm25Index(s, path, termBuckets))
+        marker = Some(m)))(
+      s => Search.compactBm25Index(s, path))
   }
 
   /** [[maintainBm25IndexCdc]] for the unified lexical artifact
@@ -1106,7 +1109,6 @@ object Streaming {
       textCol: String,
       path: String,
       checkpointDir: String,
-      termBuckets: Int = 64,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
       vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
@@ -1114,12 +1116,12 @@ object Streaming {
     maintainCdcChain(stream, idCol, statusCol, path, checkpointDir,
       compactEvery, vacuumEvery, vacuumRetain)(
       (a, m) => Search.buildLexicalIndex(a, idCol, textCol, path,
-        termBuckets, marker = Some(m)))(
+        marker = Some(m)))(
       (d, m) => Search.deleteFromBm25Index(d.sparkSession, path, d, idCol,
         marker = m))(
       (a, m) => Search.appendToLexicalIndex(a, idCol, textCol, path,
-        termBuckets, marker = Some(m)))(
-      s => Search.compactBm25Index(s, path, termBuckets))
+        marker = Some(m)))(
+      s => Search.compactBm25Index(s, path))
   }
 
   /** [[maintainBm25IndexCdc]] for the IVF index: removed/changed
@@ -1503,20 +1505,19 @@ object Streaming {
       textCol: String,
       path: String,
       checkpointDir: String,
-      termBuckets: Int = 64,
       compactEvery: Int = 0,
       vacuumEvery: Int = 0,
       vacuumRetain: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.operators.Search
     maintainChain(stream, path, checkpointDir, compactEvery,
       vacuumEvery, vacuumRetain)(
-      (b, m) => Search.buildLexicalIndex(b, idCol, textCol, path, termBuckets,
+      (b, m) => Search.buildLexicalIndex(b, idCol, textCol, path,
         marker = Some(m)))(
       (b, m) => Search.appendToLexicalIndex(b, idCol, textCol, path,
-        termBuckets, marker = Some(m)))(
+        marker = Some(m)))(
       // compactBm25Index rewrites the FULL postings schema, so the
       // positional payload survives the unified artifact's compact
-      s => Search.compactBm25Index(s, path, termBuckets))
+      s => Search.compactBm25Index(s, path))
   }
 
   /** [[maintainBm25Index]] for the MinHash near-dup index — the crawl

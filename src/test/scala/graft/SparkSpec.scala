@@ -35,4 +35,22 @@ abstract class SparkSpec extends AnyFunSuite {
       s"column mismatch: ${a.columns.toSeq} vs ${b.columns.toSeq}")
     assert(rowSet(a) == rowSet(b))
   }
+
+  /** Hand-rewrite the current version's `_SEGMENTS` of the persisted
+    * index at `indexPath` with `header` in place of its format stamp
+    * (None: no header at all, the layout builds wrote before the stamp
+    * existed).
+    */
+  def restampSegments(indexPath: String, header: Option[String] = None): Unit = {
+    val seg = new org.apache.hadoop.fs.Path(
+      graft.sources.IndexIO.resolve(spark, indexPath), "_SEGMENTS")
+    val fs = seg.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = fs.open(seg)
+    val entries =
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList.tail
+      finally in.close()
+    val out = fs.create(seg, true)
+    try out.write((header.toList ++ entries).mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+  }
 }

@@ -453,6 +453,14 @@ class TextFunctionsSuite extends SparkSpec {
     assert(r(3) == "no accents at all")
   }
 
+  test("termPostings on a non-string column fails at analysis") {
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Seq(1, 2).toDF("n")
+        .select(TextFunctions.termPostings(col("n"), withPositions = false))
+    }
+    assert(e.getMessage.contains("graft_term_postings"), e.getMessage)
+  }
+
   test("termPostings: differential vs the posexplode->groupBy aggregate it replaces") {
     // the index builds replaced `posexplode(tokens) -> groupBy(term,
     // doc).agg(count, sort_array(collect_list(pos)))` with the

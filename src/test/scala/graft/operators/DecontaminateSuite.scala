@@ -160,37 +160,18 @@ class DecontaminateSuite extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(liveHashes() == expected)
   }
 
-  test("counted appends onto a legacy pre-counts chain read, retract, and compact") {
-    import graft.functions.TextFunctions
+  test("evalIndexHashes refuses an index without the current format stamp") {
     val evalA = Seq((100L, "the quick brown fox jumps over the lazy dog"))
       .toDF("doc_id", "text")
-    val evalB = Seq((101L, "pack my box with five dozen liquor jugs"))
-      .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("graft_eval_mig_").toString
-    // hand-build the LEGACY artifact layout: distinct hashes only, no cnt
-    graft.sources.IndexIO.publish(spark, idx) { vdir =>
-      evalA.select(explode(TextFunctions.shingles(col("text"), 3)).as("__s"))
-        .select(xxhash64(col("__s")).as("h")).distinct()
-        .coalesce(1).write.parquet(s"$vdir/hashes")
-      Seq(Tuple1(3)).toDF("n").coalesce(1).write.parquet(s"$vdir/meta")
+    val idx = java.nio.file.Files.createTempDirectory("graft_eval_unstamped_").toString
+    Decontaminate.buildEvalIndex(evalA, "text", idx, n = 3)
+    restampSegments(idx)
+    val e = intercept[IllegalStateException] {
+      Decontaminate.evalIndexHashes(spark, idx)
     }
-    def liveHashes() = Decontaminate.evalIndexHashes(spark, idx)
-      .as[Long].collect().toSet
-    val legacyOnly = liveHashes()
-    assert(legacyOnly.nonEmpty)
-    // a counted append onto the mixed chain must NOT brick the readers
-    // (unionByName without allowMissingColumns threw AnalysisException)
-    Decontaminate.appendToEvalIndex(evalB, "text", idx)
-    val after = liveHashes()
-    assert(legacyOnly.subsetOf(after) && after.size > legacyOnly.size)
-    // retracting the counted append restores the legacy set exactly —
-    // legacy rows count as one occurrence, so they stay live
-    Decontaminate.deleteFromEvalIndex(evalB, "text", idx)
-    assert(liveHashes() == legacyOnly)
-    // and the migrating compact rewrites the chain into the counted layout
-    Decontaminate.compactEvalIndex(spark, idx)
-    assert(graft.sources.IndexIO.segments(spark, idx).length == 1)
-    assert(liveHashes() == legacyOnly)
+    assert(e.getMessage.contains(idx) && e.getMessage.contains("unstamped") &&
+      e.getMessage.contains(s"expected format ${graft.sources.IndexIO.FormatVersion}") &&
+      e.getMessage.contains("rebuild"), e.getMessage)
   }
 
   private def collectBroadcasts(plan: SparkPlan): Seq[SparkPlan] =

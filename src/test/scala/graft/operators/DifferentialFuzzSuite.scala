@@ -249,11 +249,11 @@ class DifferentialFuzzSuite extends SparkSpec {
       val cut1 = 1 + rnd.nextInt(n - 2)
       val cut2 = cut1 + 1 + rnd.nextInt(n - cut1 - 1)
       Search.buildBm25Index(df.filter($"doc_id" < cut1), "doc_id", "text",
-        dir, termBuckets = 3)
+        dir)
       Search.appendToBm25Index(df.filter($"doc_id" >= cut1 && $"doc_id" < cut2),
-        "doc_id", "text", dir, termBuckets = 3)
+        "doc_id", "text", dir)
       Search.appendToBm25Index(df.filter($"doc_id" >= cut2), "doc_id", "text",
-        dir, termBuckets = 3)
+        dir)
       val terms = Seq.fill(2 + rnd.nextInt(2))(vocab(rnd.nextInt(vocab.size))).distinct
       assertSameRows(
         Search.bm25TopK(df, "doc_id", "text", terms, k = 10),

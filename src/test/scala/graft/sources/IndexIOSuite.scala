@@ -115,6 +115,37 @@ class IndexIOSuite extends SparkSpec {
     }
   }
 
+  test("a version without the current format stamp is refused by every read and publish") {
+    def refusedEverywhere(header: Option[String], found: String): Unit = {
+      val base = newBase()
+      IndexIO.publish(spark, base, "b0")(vdir => writeTable(vdir, "a", Seq(1)))
+      IndexIO.publishDelta(spark, base)(vdir => writeTable(vdir, "a", Seq(2)))
+      val v = IndexIO.currentVersionId(spark, base)
+      restampSegments(base, header)
+      def refused(f: => Any): Unit = {
+        val m = intercept[IllegalStateException](f).getMessage
+        assert(m.contains(base) && m.contains(s"format $found") &&
+          m.contains(s"expected format ${IndexIO.FormatVersion}") &&
+          m.contains("remove the directory and rebuild"), m)
+      }
+      refused(IndexIO.resolve(spark, base))
+      refused(IndexIO.segments(spark, base))
+      refused(IndexIO.segmentsIfExists(spark, base))
+      refused(IndexIO.chainTable(spark, base, "a"))
+      refused(IndexIO.segmentMarkersIfExists(spark, base))
+      refused(IndexIO.resolve(spark, IndexIO.pin(base, v)))
+      var built = false
+      refused(IndexIO.publishDelta(spark, base) { _ => built = true })
+      refused(IndexIO.publish(spark, base) { _ => built = true })
+      assert(!built, "a refused publish must not run its build")
+      assert(IndexIO.currentVersionId(spark, base) == v)
+    }
+    // the layout builds wrote before the stamp: segment names only
+    refusedEverywhere(None, "none (unstamped _SEGMENTS)")
+    // a stamp naming another format
+    refusedEverywhere(Some("format=1"), "1")
+  }
+
   test("publishDelta without a committed base fails loudly") {
     val base = newBase()
     val ex = intercept[IllegalStateException] {
@@ -323,10 +354,9 @@ class IndexIOSuite extends SparkSpec {
   }
 
   test("pin: an in-flight (no _SEGMENTS) version fails loudly at resolve") {
-    // round-16 ADVICE: a crashed/in-flight build id has a version DIR
-    // but no _SEGMENTS; the pre-segments read fallback would serve its
-    // torn tables silently. A pin asserting "this was published" must
-    // fail instead.
+    // a crashed/in-flight build id has a version DIR but no _SEGMENTS;
+    // serving it would expose its torn tables silently. A pin asserting
+    // "this was published" must fail instead.
     val base = newBase()
     IndexIO.publish(spark, base)(vdir => writeTable(vdir, "a", Seq(1)))
     // simulate an in-flight sibling build: dir exists, not committed

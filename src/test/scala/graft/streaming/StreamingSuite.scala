@@ -638,8 +638,7 @@ class StreamingSuite extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String)]
     val q = Streaming.maintainBm25Index(
-      input.toDF().toDF("doc_id", "text"), "doc_id", "text", dir, ckpt,
-      termBuckets = 3)
+      input.toDF().toDF("doc_id", "text"), "doc_id", "text", dir, ckpt)
     try {
       input.addData(docs(0), docs(1)) // bootstraps
       q.processAllAvailable()
@@ -670,7 +669,7 @@ class StreamingSuite extends SparkSpec {
     assert(graft.sources.IndexIO.resolve(spark, dir) == v0)
     // compaction (a FULL publish) carries the applied-batch markers, so
     // a post-compaction replay is still recognized
-    Search.compactBm25Index(spark, dir, termBuckets = 3)
+    Search.compactBm25Index(spark, dir)
     assert(graft.sources.IndexIO.segments(spark, dir).length == 1)
     assert(graft.sources.IndexIO.segmentMarkers(spark, dir) == markers0)
     assertSameRows(
@@ -683,8 +682,7 @@ class StreamingSuite extends SparkSpec {
     val input2 = MemoryStream[(Long, String)]
     input2.addData((6L, "spark filter spark"))
     val q2 = Streaming.maintainBm25Index(
-      input2.toDF().toDF("doc_id", "text"), "doc_id", "text", dir, ckpt2,
-      termBuckets = 3)
+      input2.toDF().toDF("doc_id", "text"), "doc_id", "text", dir, ckpt2)
     try q2.processAllAvailable() finally q2.stop()
     val withSix = (docs :+ (6L, "spark filter spark")).toDF("doc_id", "text")
     assertSameRows(
@@ -705,8 +703,7 @@ class StreamingSuite extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String)]
     val q = Streaming.maintainLexicalIndex(
-      input.toDF().toDF("doc_id", "text"), "doc_id", "text", dir, ckpt,
-      termBuckets = 3)
+      input.toDF().toDF("doc_id", "text"), "doc_id", "text", dir, ckpt)
     try {
       input.addData(docs(0), docs(1)); q.processAllAvailable()
       input.addData(docs(2), docs(3)); q.processAllAvailable()
@@ -1215,7 +1212,7 @@ class StreamingSuite extends SparkSpec {
       (101L, Seq(0.0, 1.0))).toDF("vec_id", "embedding")
     val lexIdx = java.nio.file.Files.createTempDirectory("hyb_lex").toString
     val annIdx = java.nio.file.Files.createTempDirectory("hyb_ann").toString
-    Search.buildBm25Index(evalDocs, "doc_id", "text", lexIdx, termBuckets = 2)
+    Search.buildBm25Index(evalDocs, "doc_id", "text", lexIdx)
     SimilaritySearch.buildIvfIndex(evalEmb, "vec_id", "embedding", annIdx,
       nCentroids = 2)
     val rows = Seq(
@@ -1246,7 +1243,7 @@ class StreamingSuite extends SparkSpec {
 
     // live MemoryStream: stateless append, identical flags
     val lexIdx2 = java.nio.file.Files.createTempDirectory("hyb_lex2").toString
-    Search.buildBm25Index(evalDocs, "doc_id", "text", lexIdx2, termBuckets = 2)
+    Search.buildBm25Index(evalDocs, "doc_id", "text", lexIdx2)
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, String, Seq[Double])]
     val gated = Streaming.hybridDecontaminateFlags(
@@ -1770,6 +1767,15 @@ class StreamingSuite extends SparkSpec {
     assert(fromStream == hits(idxBatch))
     assert(fromStream.contains((21L, 1L)) && fromStream.contains((24L, 10L)))
     assert(!fromStream.exists(_._2 == 2L)) // gated doc never entered the index
+  }
+
+  test("decontaminateGate: a maxExactHashes past the collectable array fails loudly") {
+    val docs = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException] {
+      Streaming.decontaminateGate(spark, docs, "doc_id", "text", docs, "text",
+        n = 3, maxExactHashes = Int.MaxValue.toLong)
+    }
+    assert(e.getMessage.contains("maxExactHashes"), e.getMessage)
   }
 
   test("decontaminateGateFromIndex: build/append chain == frame-form gate") {
